@@ -45,11 +45,16 @@ MANIFEST_SCHEMA = T.StructType([
 
 def processed_ranges(spark: SparkSession, manifest_path: str,
                      table: str) -> set[tuple[int, int]]:
-    """Committed ranges for `table`; empty on first run (no manifest)."""
-    try:
-        df = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
-    except Exception:
+    """Committed ranges for `table`; empty on first run (no manifest).
+
+    Only a MISSING manifest means "nothing committed": any other read
+    failure (e.g. a corrupt or conflicting layout under the manifest
+    path) raises, because reading it as empty would silently re-export
+    the whole plan."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(manifest_path)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return set()
+    df = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
     rows = (df.where(F.col("table") == table)
               .select("start_block", "end_block").distinct().collect())
     return {(r.start_block, r.end_block) for r in rows}
@@ -73,21 +78,15 @@ def commit_ranges(spark: SparkSession, manifest_path: str, table: str,
 
 def run_incremental(spark: SparkSession, manifest_path: str, table: str,
                     plan: Iterable[tuple[int, int]],
-                    process: Callable[[int, int], None],
-                    commit_each: bool = True) -> list[tuple[int, int]]:
+                    process: Callable[[int, int], None]) -> list[tuple[int, int]]:
     """Bookmark-gated run: process only ranges not yet committed.
     Returns the ranges actually processed this run.
 
-    ``commit_each`` commits after EVERY range (the reference's
-    per-activity bookmark granularity: a crash mid-plan re-runs only
-    the in-flight range next time, at the cost of one manifest append
-    per range). False batches one commit at the end — fewer manifest
-    files, but a crash re-runs the whole remainder."""
+    Commits after EVERY range (the reference's per-activity bookmark
+    granularity): a crash mid-plan re-runs only the in-flight range
+    next time, at the cost of one manifest append per range."""
     todo = filter_unprocessed(plan, processed_ranges(spark, manifest_path, table))
     for s, e in todo:
         process(s, e)
-        if commit_each:
-            commit_ranges(spark, manifest_path, table, [(s, e)])
-    if not commit_each:
-        commit_ranges(spark, manifest_path, table, todo)
+        commit_ranges(spark, manifest_path, table, [(s, e)])
     return todo

@@ -32,12 +32,13 @@ SORT_COLUMN = {
     "logs": "block_number", "contracts": "block_number",
 }
 
+#: output file cap per partition directory (Spark's maxRecordsPerFile)
+MAX_RECORDS_PER_FILE = 5_000_000
+
 
 def convert_to_parquet(spark: SparkSession, csv_root: str, table: str,
                        out_root: str,
-                       drop_all_null_columns: bool = False,
-                       max_records_per_file: int = 5_000_000,
-                       sort_within: bool = True) -> str:
+                       drop_all_null_columns: bool = False) -> str:
     """Run the conversion for one table; returns the output path."""
     from ..sources.csv_source import read_table_csv
 
@@ -45,13 +46,13 @@ def convert_to_parquet(spark: SparkSession, csv_root: str, table: str,
     typed = typed_projection(raw, table)
     if drop_all_null_columns:
         typed = drop_null_fields(typed)
-    if sort_within and table in SORT_COLUMN:
+    if table in SORT_COLUMN:
         # local sort only (no shuffle): row-group min/max stats become
         # tight, so block_number predicates skip row groups at read
         typed = typed.sortWithinPartitions(SORT_COLUMN[table])
     out = f"{out_root.rstrip('/')}/{table}"
     (typed.write.mode("overwrite")
-          .option("maxRecordsPerFile", max_records_per_file)
+          .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
           .partitionBy("start_block", "end_block")
           .parquet(out))
     return out

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import (MERSENNE31, affine_hash, h32, h60, hash_family,
                          tokens)
+from .layout import spread_narrow_scan
 
 NGRAM_N = 3          # words per shingle
 MINHASH_K = 16       # signature length
@@ -254,11 +255,9 @@ def ssjoin_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
     # grouping and the rep-doc tokenize both run in the scan stage; a
     # one-file input would serialize them onto one core (no-op on
     # well-split input — the 100 TB case)
-    from .similarity import _ensure_scan_width
-    base = _ensure_scan_width(
+    base = spread_narrow_scan(
         df.where(F.col(text_col).isNotNull())
-          .select(F.col(id_col).alias("doc"), F.col(text_col).alias("text")),
-        df.sparkSession.sparkContext.defaultParallelism)
+          .select(F.col(id_col).alias("doc"), F.col(text_col).alias("text")))
     grp = base.select("doc", F.md5(F.col("text")).alias("ck"))
     reps = grp.groupBy("ck").agg(F.min("doc").alias("rep"))
     # (member, rep): consumed three times (semi-join + both expansion
@@ -372,10 +371,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     """Near-dup pairs by exact n-gram Jaccard via an inverted-index
     self-join. Output: (doc_a, doc_b, n_common, jaccard). Tokenize
     runs at scan width (spread-first, no-op on well-split input)."""
-    from .similarity import _ensure_scan_width
-    df = _ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    df = spread_narrow_scan(df.select(id_col, text_col))
     sh = _sized_shingles(df, id_col, text_col, n, max_shingle_df)
     a = sh.select(F.col(id_col).alias("doc_a"), "shingle",
                   F.col("sz").alias("sz_a"))
@@ -443,17 +439,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     tokenize+shingle pass runs in the SCAN stage, so a narrow input
     (one small parquet file = one task) serializes the whole
     tokenize+md5 bill onto one core while the rest idle.
-    `_ensure_scan_width` round-robins the (id, text) projection up to
+    `spread_narrow_scan` round-robins the (id, text) projection up to
     default parallelism FIRST; on a well-split input (the 100 TB
     case) it is a no-op. Since optimization r12 that pass runs ONCE:
     the shingle index is materialized (eager localCheckpoint) and
     shared by the signature aggregate and both verify join sides —
     before, each of the three consumers re-ran tokenize+shingle+
     distinct above the shared repartition exchange."""
-    from .similarity import _ensure_scan_width
-    df = _ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    df = spread_narrow_scan(df.select(id_col, text_col))
     # ONE tokenize+shingle pass (optimization r12, guide §2.4): the
     # inverted index is materialized once (eager localCheckpoint, the
     # multi-consumer discipline) and feeds all three consumers — the
@@ -516,10 +509,8 @@ def incremental_neardup(new_df: DataFrame, seen_df: DataFrame,
     no-op on well-split input): the side's shingle index is
     materialized and shared by its signature aggregate and its verify
     join side (optimization r12 — see `minhash_lsh_pairs`)."""
-    from .similarity import _ensure_scan_width
-    par = new_df.sparkSession.sparkContext.defaultParallelism
-    new_s = _ensure_scan_width(new_df.select(id_col, text_col), par)
-    seen_s = _ensure_scan_width(seen_df.select(id_col, text_col), par)
+    new_s = spread_narrow_scan(new_df.select(id_col, text_col))
+    seen_s = spread_narrow_scan(seen_df.select(id_col, text_col))
     # ONE tokenize+shingle pass per side (optimization r12, guide
     # §2.4 — same shared-index discipline as `minhash_lsh_pairs`):
     # each side's inverted index is materialized once and feeds both
@@ -584,10 +575,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
     The tokenize + per-token md5 runs in the scan stage — scan-width
     spread first (optimization r11, guide §2.5; no-op on well-split
     input)."""
-    from .similarity import _ensure_scan_width
-    df = _ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    df = spread_narrow_scan(df.select(id_col, text_col))
     # per-doc token dedup map-side (array_distinct) — no shuffle
     toks = (
         df.select(F.col(id_col),
@@ -897,11 +885,8 @@ def decontaminate(df: DataFrame, id_col: str = "doc_id",
     shuffles exactly once — a single map-side-combining aggregate on
     the doc key computes totals and hits together (a semi-join +
     separate aggregates would scan and shuffle the corpus twice)."""
-    from .similarity import _ensure_scan_width
-    sh = shingles(_ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism),
-        id_col, text_col, n)
+    sh = shingles(spread_narrow_scan(df.select(id_col, text_col)),
+                  id_col, text_col, n)
     is_bench = (F.col(id_col) % bench_mod) == 0
     bench_sh = (sh.where(is_bench).select("shingle").distinct()
                   .withColumn("_hit", F.lit(1)))
@@ -927,8 +912,7 @@ SUBSTR_GRAM_LEN = 20  # chars per gram (the "min duplicated length")
 
 def substring_dup_spans(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
-                        gram_len: int = SUBSTR_GRAM_LEN,
-                        scan_parallelism: int | None = None) -> DataFrame:
+                        gram_len: int = SUBSTR_GRAM_LEN) -> DataFrame:
     """EXACT duplicated-substring census — per document, the merged
     character spans covered by any length-`gram_len` substring that
     occurs at least twice anywhere in the corpus (including twice in
@@ -976,11 +960,10 @@ def substring_dup_spans(df: DataFrame, id_col: str = "doc_id",
     longest document, not the corpus.
     """
     from pyspark.sql import Window
-    from .similarity import _ensure_scan_width
     L = gram_len
     # the posting explosion (one row per corpus char) happens in the
     # scan stage — a one-file fixture would serialize it on one task
-    df = _ensure_scan_width(df, scan_parallelism)
+    df = spread_narrow_scan(df)
     base = df.where(F.col(text_col).isNotNull()
                     & (F.length(text_col) >= L))
     pos = base.select(
@@ -1035,8 +1018,7 @@ KR_MOD = 1_000_000_007  # 31-bit prime modulus: keeps every Horner
 
 def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = WINNOW_K,
-                        w: int = WINNOW_W,
-                        scan_parallelism: int | None = None) -> DataFrame:
+                        w: int = WINNOW_W) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every overlapping `k`-char
     gram, slide a window of `w` hashes, select each window's MINIMUM
@@ -1069,13 +1051,12 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     the 1-based gram position, fp the gram hash. Docs shorter than
     `k` chars yield no rows; docs with fewer than `w` grams winnow a
     single window over all their grams."""
-    from .similarity import _ensure_scan_width
     hexpr = (f"aggregate(slice(cs, CAST(p AS INT), {k}), "
              f"CAST(0 AS BIGINT), "
              f"(a, c) -> (a * {KR_BASE} + c) % {KR_MOD})")
     # the whole op is compute-bound INSIDE the scan — a one-file
-    # fixture would pin it to a single task (same knob as ivf_topk)
-    df = _ensure_scan_width(df, scan_parallelism)
+    # fixture would pin it to a single task
+    df = spread_narrow_scan(df)
     base = (df.where(F.col(text_col).isNotNull()
                      & (F.length(text_col) >= k))
               .select(F.col(id_col),
@@ -1106,8 +1087,7 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
 
 def winnow_shared_census(df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text", k: int = WINNOW_K,
-                         w: int = WINNOW_W,
-                         scan_parallelism: int | None = None) -> DataFrame:
+                         w: int = WINNOW_W) -> DataFrame:
     """Per-doc cross-document fingerprint-sharing census over the
     winnowed fingerprints: n_fp distinct fingerprint hashes per doc,
     n_shared of them appearing in ≥ 2 DISTINCT docs (cross-doc reuse
@@ -1117,8 +1097,7 @@ def winnow_shared_census(df: DataFrame, id_col: str = "doc_id",
     same first_seen shape as shingle_novelty, on an 8×-sampled
     stream."""
     from pyspark.sql import Window
-    fp = (winnow_fingerprints(df, id_col, text_col, k, w,
-                              scan_parallelism=scan_parallelism)
+    fp = (winnow_fingerprints(df, id_col, text_col, k, w)
           .select(id_col, "fp").distinct())
     w_fp = Window.partitionBy("fp")
     flagged = fp.withColumn(
@@ -1168,10 +1147,8 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
     pairs only materialize for docs sharing a shingle, hot shingles
     bounded by the df-cut; the directional division adds two codegen
     expressions to the same aggregate."""
-    from .similarity import _ensure_scan_width
     sh = _sized_shingles(
-        _ensure_scan_width(df.select(id_col, text_col),
-                           df.sparkSession.sparkContext.defaultParallelism),
+        spread_narrow_scan(df.select(id_col, text_col)),
         id_col, text_col, n, max_shingle_df)
     a = sh.select(F.col(id_col).alias("doc_a"), "shingle",
                   F.col("sz").alias("sz_a"))
@@ -1220,10 +1197,7 @@ def minhash_estimator_quality(df: DataFrame, id_col: str = "doc_id",
     reuse an already-materialized candidate list."""
     if pairs is None:
         pairs = minhash_lsh_pairs(df, id_col, text_col, threshold, n)
-    from .similarity import _ensure_scan_width
-    df = _ensure_scan_width(
-        df.select(id_col, text_col),
-        df.sparkSession.sparkContext.defaultParallelism)
+    df = spread_narrow_scan(df.select(id_col, text_col))
     # ONE tokenize+shingle pass (optimization r12, guide §2.4): the
     # materialized index feeds the two sz join sides AND the signature
     # aggregate (was 3 full text passes — sz consumed twice, sig once)

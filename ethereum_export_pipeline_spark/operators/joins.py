@@ -174,10 +174,11 @@ def fuzzy_pairs(df: DataFrame, id_col: str, name_col: str,
     ``levenshtein(l, r, threshold)``) was tried and measured SLOWER on
     short entity names — paired in-process A/B over the same 999 831
     candidate pairs: banded min 9.04 s vs unbounded min 6.73 s
-    (+34%; `tools/r11_ab_probe.py`). The O(min·threshold) band only
-    pays when strings are long, and names stay short at any corpus
-    scale, so the unbounded DP is kept; identical output rows were
-    verified before reverting (count MATCH + oracle)."""
+    (+34%; OPTIMIZATION_r11.md, "What changed" item 3). The
+    O(min·threshold) band only pays when strings are long, and names
+    stay short at any corpus scale, so the unbounded DP is kept;
+    identical output rows were verified before reverting (count
+    MATCH + oracle)."""
     base = (df.where(F.col(name_col).isNotNull())
               .select(F.col(id_col).alias("_id"),
                       F.col(name_col).alias("_name"),

@@ -1,5 +1,6 @@
 """Physical-layout operators: Z-order (Morton) clustering for
-multi-dimensional data skipping.
+multi-dimensional data skipping, plus the one scan-width policy every
+compute-bound operator applies to its input (`spread_narrow_scan`).
 
 A parquet lake prunes with per-file min/max statistics. Sorting by ONE
 column gives perfect skipping on that column and none on any other;
@@ -20,6 +21,28 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 Z_BITS = 16  # per-dimension bits; 2 dims × 16 bits fit easily in int64
+
+
+def spread_narrow_scan(df: DataFrame) -> DataFrame:
+    """Round-robin `df` across the session's default parallelism ONLY
+    when its scan is narrower than that (optimization r11, guide §2.5
+    input skew). A single small local file yields one partition, so a
+    compute-bound projection in the scan stage — tokenize + per-token
+    hashing, vector quantization, media generation ahead of a Python
+    decode — would run on one core while the rest idle. Callers pass
+    the LIGHT pre-compute projection (e.g. (id, text)), so the spread
+    moves only those rows and heavy derived bytes never cross it.
+
+    An already-well-split input — the 100 TB case, where file splits
+    provide the parallelism — keeps its splits and skips what would be
+    a wasted full shuffle of the table: the width is a fact of the
+    input, inspected once at plan-build time, and there is no knob.
+    Map-only operators (blocklist/phrase/pseudonymize/…) do not call
+    this: their zero-exchange plans are the contract."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= target:
+        return df
+    return df.repartition(target)
 
 
 def z_value_expr(x: str, y: str, bits: int = Z_BITS) -> Column:

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import (MERSENNE31, affine_hash_sql, h32_sql,
                           h60_sql, tokens_sql)
-from ..operators import dedup, multimodal, similarity, sketch, text
+from ..operators import dedup, layout, multimodal, similarity, sketch, text
 from ..sources.tables import load_table
 from .base import Query, cents
 
@@ -230,9 +230,7 @@ def _winnow_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     winnow_shared_census): MOSS window-minimum sampling inside the
     scan, cross-doc fingerprint reuse per doc — the sampled
     exact-match detector at ~1/8 of substring_dup_spans' exchange."""
-    return dedup.winnow_shared_census(
-        load_table(spark, sf_dir, "documents"),
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+    return dedup.winnow_shared_census(load_table(spark, sf_dir, "documents"))
 
 
 def _winnow_census_sql() -> str:
@@ -857,12 +855,11 @@ def get_quantizers() -> tuple[list[list[int]], list[list[list[int]]]]:
 
 
 def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # scan_parallelism self-decides: the one-file fixture spreads the
-    # compute-bound cell assignment, an already-split table is left be
+    # the operator spreads the compute-bound cell assignment of the
+    # one-file fixture; an already-split table is left be
     return similarity.ivf_topk(
         load_table(spark, sf_dir, "embeddings"), get_quantizers()[0],
-        k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+        k=TOPK_K)
 
 
 def _ivf_cell_sql() -> str:
@@ -894,8 +891,7 @@ cos AS (SELECT query_id, neighbor_id, {_COS} AS cosine FROM scored)
 def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, books = get_quantizers()
     return similarity.ivfpq_topk(
-        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K)
 
 
 def _ivfpq_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -907,8 +903,7 @@ def _ivfpq_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Horner nibble packing is value-pinned."""
     cents, books = get_quantizers()
     return similarity.ivfpq_packed_topk(
-        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+        load_table(spark, sf_dir, "embeddings"), cents, books, k=TOPK_K)
 
 
 def _ivfpq_packed_sql() -> str:
@@ -1700,11 +1695,9 @@ def _crawl_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11, guide §2.5): a one-file corpus runs the whole strip on one
     # core otherwise; the checkpointed frame then hands its width to
     # all seven downstream consumers. No-op on well-split input.
-    from ..operators.similarity import _ensure_scan_width
-    crawl = (_ensure_scan_width(
+    crawl = (layout.spread_narrow_scan(
                  load_table(spark, sf_dir, "documents")
-                 .where("text IS NOT NULL").select("doc_id", "source", "text"),
-                 spark.sparkContext.defaultParallelism)
+                 .where("text IS NOT NULL").select("doc_id", "source", "text"))
              .selectExpr("doc_id", "source", f"{wrapped} AS html")
              .selectExpr("doc_id", "source", f"{stripped} AS text")
              .localCheckpoint(eager=True))
@@ -4412,9 +4405,7 @@ def _substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged char spans covered by any 20-char gram occurring >= 2
     times corpus-wide (operators/dedup.substring_dup_spans). One
     posting per corpus character shuffles; span merge is per-doc."""
-    return dedup.substring_dup_spans(
-        load_table(spark, sf_dir, "documents"),
-        scan_parallelism=spark.sparkContext.defaultParallelism)
+    return dedup.substring_dup_spans(load_table(spark, sf_dir, "documents"))
 
 
 _SUBSTR_L = dedup.SUBSTR_GRAM_LEN
@@ -5357,9 +5348,7 @@ def _ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuning measurement next to `emb_ann_recall`'s band/plane one."""
     return similarity.ivf_recall_report(
         load_table(spark, sf_dir, "embeddings"), get_quantizers()[0],
-        k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism,
-        exact=_exact_topk(spark, sf_dir))
+        k=TOPK_K, exact=_exact_topk(spark, sf_dir))
 
 
 def _ivf_recall_sql() -> str:
@@ -5413,9 +5402,7 @@ def _pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, books = get_quantizers()
     return similarity.pq_recall_report(
         load_table(spark, sf_dir, "embeddings"), cents, books,
-        k=TOPK_K,
-        scan_parallelism=spark.sparkContext.defaultParallelism,
-        exact=_exact_topk(spark, sf_dir))
+        k=TOPK_K, exact=_exact_topk(spark, sf_dir))
 
 
 def _pq_recall_sql() -> str:

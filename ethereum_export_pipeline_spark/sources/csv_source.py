@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..partitioning import pad8
+from ..partitioning import pad8_col, partition_path
 from ..schemas import csv_schema
 
 
@@ -45,15 +45,7 @@ def read_table_csv(spark: SparkSession, root: str, table: str,
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .schema(schema)
     )
-    df = reader.csv(f"{root.rstrip('/')}/{table}/")
-    # Spark's partition-dir inference may have read `start_block=00000000`
-    # as the integer 0; re-pad so the zero-padded string layout
-    # (lexicographic == numeric, config.py:32-33) survives the round trip.
-    from ..partitioning import pad8_col
-    for c in ("start_block", "end_block"):
-        if c in df.columns:
-            df = df.withColumn(c, pad8_col(F.col(c).cast("long")))
-    return df
+    return _repad_range_cols(reader.csv(f"{root.rstrip('/')}/{table}/"))
 
 
 def read_table_parquet(spark: SparkSession, root: str, table: str) -> DataFrame:
@@ -61,8 +53,14 @@ def read_table_parquet(spark: SparkSession, root: str, table: str) -> DataFrame:
     partition values (`start_block=00000000`) as int; re-pad them so the
     declared string schema (and lexicographic-==-numeric ordering)
     holds on the query surface too."""
-    df = spark.read.parquet(f"{root.rstrip('/')}/{table}")
-    from ..partitioning import pad8_col
+    return _repad_range_cols(spark.read.parquet(f"{root.rstrip('/')}/{table}"))
+
+
+def _repad_range_cols(df: DataFrame) -> DataFrame:
+    """Spark's partition-dir inference reads `start_block=00000000` as
+    the integer 0; re-pad so the zero-padded string layout
+    (lexicographic == numeric, config.py:32-33) survives the round
+    trip."""
     for c in ("start_block", "end_block"):
         if c in df.columns:
             df = df.withColumn(c, pad8_col(F.col(c).cast("long")))
@@ -79,6 +77,6 @@ def write_partition_csv(df: DataFrame, root: str, table: str,
     in fixtures — large-scale writes should instead leave Spark's file
     count alone and rely on the directory as the unit.)
     """
-    path = f"{root.rstrip('/')}/{table}/start_block={pad8(start)}/end_block={pad8(end)}"
+    path = partition_path(table, start, end, root)
     df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
     return path

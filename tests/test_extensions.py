@@ -641,17 +641,96 @@ def test_crossmodal_agreement_identical_and_orthogonal(spark):
     assert got[(0, 2)].emb_agrees == 0
 
 
-def test_ensure_scan_width_skips_already_split_input(spark):
-    """The IVF scan-parallelism knob must only repartition a NARROW
-    scan: an input already split at least as wide keeps its partitions
-    (no round-robin shuffle of the 100 TB table)."""
-    from ethereum_export_pipeline_spark.operators.similarity import (
-        _ensure_scan_width)
+def test_spread_narrow_scan_skips_already_split_input(spark):
+    """The scan-width spread must only repartition a NARROW scan: an
+    input already split at least as wide as the session's default
+    parallelism keeps its partitions (no round-robin shuffle of the
+    100 TB table)."""
+    from ethereum_export_pipeline_spark.operators.layout import (
+        spread_narrow_scan)
+    width = spark.sparkContext.defaultParallelism
     narrow = spark.range(100).coalesce(1)
-    assert _ensure_scan_width(narrow, 8).rdd.getNumPartitions() == 8
-    wide = spark.range(100).repartition(16)
-    assert _ensure_scan_width(wide, 8) is wide        # untouched plan
-    assert _ensure_scan_width(wide, None) is wide
+    assert spread_narrow_scan(narrow).rdd.getNumPartitions() == width
+    wide = spark.range(100).repartition(width * 2)
+    assert spread_narrow_scan(wide) is wide        # untouched plan
+
+
+def _scan_width_fixtures(spark, n_parts: int):
+    """(documents, embeddings) read as `n_parts` scan partitions with no
+    exchange of their own (`spark.range` splits natively)."""
+    base = spark.range(0, 48, 1, n_parts)
+    d = base.selectExpr(
+        "id AS doc_id",
+        "concat('alpha beta gamma delta epsilon zeta eta theta w', "
+        "id % 5, ' iota kappa lambda mu nu xi omicron pi ', id % 3) "
+        "AS text")
+    e = base.selectExpr(
+        "id AS vec_id",
+        "transform(sequence(1, 64), i -> CAST((id * i) % 17 - 8 AS FLOAT))"
+        " AS embedding")
+    return d, e
+
+
+def _spread_ops():
+    from ethereum_export_pipeline_spark.operators import (
+        dedup, multimodal, similarity, text)
+    cents = [[100 * (c + 1)] * 64 for c in range(2)]
+    return {
+        "minhash_lsh_pairs": lambda d, e: dedup.minhash_lsh_pairs(d),
+        "simhash_pairs": lambda d, e: dedup.simhash_pairs(d),
+        "bm25_topk": lambda d, e: text.bm25_topk(d),
+        "brute_force_topk": lambda d, e: similarity.brute_force_topk(e, k=3),
+        "embedding_neardup_pairs":
+            lambda d, e: similarity.embedding_neardup_pairs(e),
+        "documents_as_ppm_media":
+            lambda d, e: multimodal.documents_as_ppm_media(d),
+        "ivf_topk": lambda d, e: similarity.ivf_topk(e, cents, k=3),
+        "substring_dup_spans": lambda d, e: dedup.substring_dup_spans(d),
+        "winnow_fingerprints": lambda d, e: dedup.winnow_fingerprints(d),
+        "semdedup_cells": lambda d, e: similarity.semdedup_cells(e, cents),
+    }
+
+
+def _plans_with_checkpoints(spark, monkeypatch, build) -> str:
+    """Physical plan of `build()`'s result PLUS every frame it
+    localCheckpoints on the way (an eagerly materialized index hides
+    its scan stage from the final plan)."""
+    frame_cls = type(spark.range(1))
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    seen = []
+    checkpoint = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        seen.append(plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    seen.append(plan(build()))
+    monkeypatch.undo()
+    return "\n".join(seen)
+
+
+@pytest.mark.parametrize("op", sorted(_spread_ops()))
+def test_scan_width_spread_is_derived_from_the_input(spark, monkeypatch, op):
+    """A one-partition input is round-robined to the session's default
+    parallelism by every spreading operator, with no width argument;
+    an input already split that wide is left alone; `semdedup_cells`
+    never spreads."""
+    width = spark.sparkContext.defaultParallelism
+    spread = f"RoundRobinPartitioning({width})"
+    build = _spread_ops()[op]
+    narrow = _plans_with_checkpoints(
+        spark, monkeypatch, lambda: build(*_scan_width_fixtures(spark, 1)))
+    if op == "semdedup_cells":
+        assert "RoundRobinPartitioning" not in narrow, narrow
+    else:
+        assert spread in narrow, narrow
+    split = _plans_with_checkpoints(
+        spark, monkeypatch, lambda: build(*_scan_width_fixtures(spark, width)))
+    assert "RoundRobinPartitioning" not in split, split
 
 
 def test_bmp_roundtrip_and_dispatch():

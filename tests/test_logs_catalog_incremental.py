@@ -397,6 +397,24 @@ def test_incremental_commit_each_survives_midplan_crash(spark, tmp_path):
     assert seen == [(0, 9), (10, 19), (20, 29)]
 
 
+def test_processed_ranges_missing_vs_unreadable_manifest(spark, tmp_path):
+    """Only a MISSING manifest reads as "nothing committed". An
+    unreadable one — conflicting partition directories under the
+    manifest path — must raise, not silently re-export the whole
+    plan."""
+    import pytest as _pytest
+    from ethereum_export_pipeline_spark.incremental import (
+        commit_ranges, processed_ranges)
+    assert processed_ranges(spark, str(tmp_path / "absent"), "blocks") == set()
+    manifest = str(tmp_path / "manifest")
+    commit_ranges(spark, manifest, "blocks", [(0, 9)])
+    assert processed_ranges(spark, manifest, "blocks") == {(0, 9)}
+    spark.range(1).write.parquet(manifest + "/a=1")
+    spark.range(1).write.parquet(manifest + "/b=2")
+    with _pytest.raises(Exception, match="(?i)conflicting"):
+        processed_ranges(spark, manifest, "blocks")
+
+
 def test_malformed_long_data_decodes_to_null(spark):
     rows = [Row(transaction_hash="0xm", log_index=0, address="0xtok",
                 data="0x" + "f" * 128,  # 64 bytes: malformed for ERC-20
