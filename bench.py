@@ -277,7 +277,7 @@ HEADLINE = [
 # Stateful streaming queries run LAST: round-10 measured an
 # applyInPandasWithState residue that ~doubles the mapInPandas
 # round-trip for the REST of the session (JVM-side — survives
-# worker recycling, invisible to the pure-JVM canary; see SCALE.md).
+# fresh Python workers, invisible to the pure-JVM canary; see SCALE.md).
 # With streams interleaved, every Arrow-heavy row scheduled after the
 # first stream paid that tax and read as mysterious drift. Relative
 # order within each group is preserved; the canary trace brackets the
@@ -488,8 +488,8 @@ def main() -> int:
     # reading) instead of inflating the FIRST timed artifact row —
     # r11's artifact:ssjoin_pairs read 13-22 s in-bench vs a 3.6-5 s
     # warm probe purely because it built second in a cold session.
-    # The begin-canary's worker pool is pristine by construction now
-    # (nothing Arrow-heavy has run yet), so no pre-recycle is needed.
+    # The begin-canary's worker pool is pristine by construction
+    # (nothing Arrow-heavy has run yet).
     def _py_canary(pdfs):
         for pdf in pdfs:
             yield pdf.assign(v=(pdf["id"] * 2654435761 % 1000003))
@@ -550,26 +550,13 @@ def main() -> int:
         art_total += timings_art[name]
         print(f"# {name}: {timings_art[name]:.3f}s", file=sys.stderr)
 
-    # Python-worker recycling (the round-9 canaries' mitigation): the
-    # bracketing canaries measured the mapInPandas path degrading 2.5×
-    # across one ~200-query session while the JVM canary stayed flat —
-    # reused Python workers age (allocator fragmentation, module
-    # caches, GC debt). Killing the pooled workers every RECYCLE_EVERY
-    # queries bounds any worker's age; the factory forks fresh ones
-    # from the still-live daemon, and min-of-2 absorbs the one-time
-    # fork+import cost on the next Arrow query's first run. The end
-    # canaries then read the residual (≤ one cadence) aging, not a
-    # whole session's.
-    from ethereum_export_pipeline_spark.session import recycle_python_workers
-    RECYCLE_EVERY = 25
-    recycles = 0
-
-    # canary TRACE at each recycle point (jvm 1-shot + py min-of-2,
-    # measured BEFORE the recycle so the reading shows the aged
-    # state): the round-10 controlled repro showed 120 back-to-back
+    # canary TRACE every TRACE_EVERY queries (jvm 1-shot + py
+    # min-of-2): the round-10 controlled repro showed 120 back-to-back
     # mapInPandas queries do NOT age the path, so whatever inflates
     # the end canary comes from specific catalog families — the trace
     # localizes which 25-query span does it.
+    TRACE_EVERY = 25
+
     def _canary_pair() -> tuple[float, float]:
         t0 = time.time()
         spark.range(0, 400_000_000, 1, 32) \
@@ -589,21 +576,17 @@ def main() -> int:
     timings: dict[str, float] = {}
     total = 0.0
     for i, name in enumerate(HEADLINE):
-        if i % RECYCLE_EVERY == 0:
+        if i % TRACE_EVERY == 0:
             jvm_t, py_t = _canary_pair()
             ld = _load1()
-            n = recycle_python_workers(spark)
-            recycles += 1
             # small steady-state write probe (128 MB, capped 6 s):
             # a co-tenant disk burst mid-run shows up HERE, not in
             # load1 or the CPU canaries (round-11 second incident)
             io_t = _io_write_mbps(mb_batch=32, batches=4, budget_s=6.0)
             canary_trace.append({"i": i, "jvm": jvm_t, "py": py_t,
-                                 "load1": ld, "io_mbps": io_t,
-                                 "killed": n})
+                                 "load1": ld, "io_mbps": io_t})
             print(f"# canary@{i}: jvm {jvm_t:.3f}s py {py_t:.3f}s "
-                  f"load {ld:.1f} write {io_t:.0f} MB/s;"
-                  f" recycled {n} workers", file=sys.stderr)
+                  f"load {ld:.1f} write {io_t:.0f} MB/s", file=sys.stderr)
         best = float("inf")
         runs = 0
         while runs < 2 or (runs < 3 and best < 2.5):
@@ -708,7 +691,6 @@ def main() -> int:
             "py_calibration_sec": py_calib,
             "calibration_end_sec": calib_end,
             "py_calibration_end_sec": py_calib_end,
-            "py_worker_recycles": recycles,
             "canary_trace": canary_trace,
             "load1_ambient": load_ambient,
             "load_gate": gate,
@@ -761,7 +743,6 @@ def main() -> int:
             "py_calibration_sec": py_calib,
             "calibration_end_sec": calib_end,
             "py_calibration_end_sec": py_calib_end,
-            "py_worker_recycles": recycles,
             "load1_begin": load_begin,
             "load1_end": load_end,
             "load1_ambient": load_ambient,

@@ -15,9 +15,11 @@ column reads as a nanosecond-epoch BIGINT. Either way
 from __future__ import annotations
 
 import os
-import weakref
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from .util import scratch_dir
 
 #: Runtime-settable confs that `ensure_conf` applies to sessions we did
 #: not create (e.g. the correctness driver's session).
@@ -50,41 +52,87 @@ RUNTIME_CONFS = {
 }
 
 
-def get_spark(app_name: str = "ethereum_export_pipeline_spark",
-              cpus: int | None = None) -> SparkSession:
-    """Build (or reuse) a local SparkSession tuned for this engine.
+#: HotSpot tier-4 (C2) thresholds for the JVMs `get_spark` launches,
+#: at 10x the JDK 17 defaults (5000 / 600 / 15000 / 40000). A perfbench
+#: run is one cold JVM of ~100-200 short jobs; with the default
+#: thresholds C2 promotes the driver's only-warm Catalyst planning code
+#: within the first few jobs, and in a session that short those
+#: compiles never pay back (JIT compiler threads were 33.5 of 74.9
+#: CPU-s of an export_convert cycle). The price is paid by sessions
+#: that repeat the same operators for minutes: warm-but-not-hot code
+#: runs longer in profiled C1 code (warm corpus_dedup spans +8-30%, a
+#: 90-s corpus_dedup loop and `bench.py` +4-5%, the 20M-row canary
+#: +15-40%). Measured per candidate in SCALE.md ("Local-session JIT
+#: budget"). JVM flags only take effect at launch, so sessions
+#: `ensure_conf` adopts, and cluster executors, keep their own JIT.
+#: Passed as ``spark.driver.defaultJavaOptions`` so a caller's own
+#: ``spark.driver.extraJavaOptions`` still applies on top.
+JIT_JAVA_OPTIONS = " ".join([
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=150000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+])
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. On a real
-    cluster the same confs apply, minus master/driver-memory, which the
-    cluster manager owns.
-    """
+
+def shuffle_width(spark: SparkSession) -> int:
+    """Shuffle width ~ the session's cores (Spark's 200 default wastes
+    scheduling overhead on local corpora; AQE coalesces further).
+    Derived from the session, never from the host, so a child of a
+    `get_spark(cpus=4)` session on a 32-core host still gets 4.
+
+    On a cluster backend with ``spark.default.parallelism`` unset,
+    ``defaultParallelism`` is the executor cores registered so far
+    (floor 2): a session adopted before its executors register (e.g.
+    under dynamic allocation) gets the floor of 4. AQE can merge
+    partitions but not split them, so set ``spark.default.parallelism``
+    on such clusters."""
+    return max(spark.sparkContext.defaultParallelism, 4)
+
+
+def local_builder(app_name: str = "ethereum_export_pipeline_spark",
+                  cpus: int | None = None) -> SparkSession.Builder:
+    """The builder behind `get_spark`: local master, Arrow, driver
+    memory and JIT flags, no UI, the runtime confs and, when a new
+    context is being built, a warehouse dir removed at exit. Callers
+    that need further static confs (the event-logged scale suites) add
+    them, call ``getOrCreate`` and then set the shuffle width as
+    `get_spark` does."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    import tempfile
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # shuffle width ~ cores for local mode; AQE coalesces further.
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.defaultJavaOptions", JIT_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
-        # keep managed tables (bucketed saveAsTable) out of the repo cwd
-        .config("spark.sql.warehouse.dir",
-                tempfile.mkdtemp(prefix="spark_graft_wh_"))
     )
+    if SparkContext._active_spark_context is None:
+        # a new context is being built (getOrCreate would otherwise
+        # hand back the live session): keep managed tables (bucketed
+        # saveAsTable) out of the repo cwd, in a dir removed at exit
+        builder = builder.config("spark.sql.warehouse.dir",
+                                 scratch_dir("spark_graft_wh_"))
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    return builder
+
+
+def get_spark(app_name: str = "ethereum_export_pipeline_spark",
+              cpus: int | None = None) -> SparkSession:
+    """Build (or reuse) a local SparkSession tuned for this engine
+    (`local_builder`), with the shuffle width of `shuffle_width`.
+
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. On a real
+    cluster the same confs apply, minus master/driver-memory and the
+    driver JIT flags (`JIT_JAVA_OPTIONS`), which the cluster manager
+    owns.
+    """
+    spark = local_builder(app_name, cpus).getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width(spark)))
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-#: Live child sessions handed out by `isolated_session`. Each
-#: SparkSession owns its OWN StreamingQueryManager, so a safety check
-#: like "no streaming query is running in this JVM" cannot be answered
-#: from one session alone — `recycle_python_workers` walks this set.
-_CHILD_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 
 
 def isolated_session(spark: SparkSession) -> SparkSession:
@@ -96,108 +144,7 @@ def isolated_session(spark: SparkSession) -> SparkSession:
     invisible to any query concurrently planning on the caller's
     session (set/restore on a SHARED session has a race window).
     The child gets the same runtime confs `ensure_conf` guarantees."""
-    child = ensure_conf(spark.newSession())
-    _CHILD_SESSIONS.add(child)
-    return child
-
-
-def _any_stream_active(spark: SparkSession) -> bool:
-    """True if ANY session sharing this process has an active
-    streaming query: the caller's, any `isolated_session` child
-    (streams run on those — each session has its own
-    StreamingQueryManager, so the caller's `spark.streams` alone
-    can't see them), or the JVM-registered active/default session."""
-    candidates = [spark, *list(_CHILD_SESSIONS)]
-    try:
-        active = SparkSession.getActiveSession()
-        if active is not None:
-            candidates.append(active)
-    except Exception:
-        pass
-    for s in candidates:
-        try:
-            if s.streams.active:
-                return True
-        except Exception:
-            continue  # session stopped mid-walk: no streams there
-    return False
-
-
-def recycle_python_workers(spark: SparkSession) -> int:
-    """Kill this session's POOLED Python worker processes so the next
-    Arrow/mapInPandas stage forks fresh ones. Returns the number of
-    workers killed.
-
-    Why: long multi-query sessions age the reused Python workers —
-    bench.py's bracketing canaries measured the mapInPandas path
-    degrading 2.5× across a ~200-query run while the pure-JVM canary
-    stayed flat (worker-state accumulation: allocator fragmentation,
-    module caches, GC debt). At 100 TB the same tax lands on any
-    long-lived executor running Arrow stages back to back.
-
-    Why this is safe: `spark.python.worker.reuse` parks idle workers
-    in PythonWorkerFactory's idle queue, and the 4.1 factory checks
-    liveness on dequeue — a dead pooled worker is discarded with a
-    WARN ("process from idle queue is dead, discarding.") and a fresh
-    one is forked from the still-running pyspark.daemon (verified
-    empirically in tests/test_round10_ops.py: kill → query succeeds →
-    pool refills). The daemon itself is never touched, so fork cost
-    (not interpreter start-up) is the only re-warm price, and it's
-    paid off the timed path when callers recycle between queries.
-
-    Only call between jobs: a worker killed mid-task fails that task,
-    and local mode defaults to spark.task.maxFailures=1. Streaming
-    micro-batches are jobs too, and streams run on `isolated_session`
-    children whose queries the caller's `spark.streams` can't see —
-    so the function itself refuses (returns 0, kills nothing) while
-    ANY session in this process has an active streaming query, rather
-    than trusting every call site to remember.
-
-    Scoping: walks /proc for `pyspark.daemon` processes whose
-    ancestry contains THIS session's JVM pid, then SIGKILLs only
-    their forked children (the workers). Other Spark sessions on the
-    host are untouched."""
-    import signal
-
-    if _any_stream_active(spark):
-        return 0
-
-    jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
-    cmds, ppids = {}, {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/cmdline", "rb") as fh:
-                cmd = fh.read().replace(b"\0", b" ").decode(errors="replace")
-            with open(f"/proc/{pid}/stat") as fh:
-                ppid = int(fh.read().rsplit(")", 1)[-1].split()[1])
-        except OSError:
-            continue  # raced with process exit
-        cmds[int(pid)] = cmd
-        ppids[int(pid)] = ppid
-
-    def _under_jvm(pid: int) -> bool:
-        seen = set()
-        while pid > 1 and pid not in seen:
-            if pid == jvm_pid:
-                return True
-            seen.add(pid)
-            pid = ppids.get(pid, 0)
-        return False
-
-    daemons = {p for p, c in cmds.items()
-               if "pyspark.daemon" in c and _under_jvm(p)}
-    workers = [p for p in cmds
-               if ppids.get(p) in daemons and "pyspark" in cmds[p]]
-    killed = 0
-    for pid in workers:
-        try:
-            os.kill(pid, signal.SIGKILL)
-            killed += 1
-        except OSError:
-            pass  # already gone
-    return killed
+    return ensure_conf(spark.newSession())
 
 
 def ensure_conf(spark: SparkSession) -> SparkSession:
@@ -205,13 +152,12 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
 
     The correctness driver hands us its own SparkSession; these confs
     are all runtime-settable so queries behave identically there.
-    Shuffle width is sized to the machine (Spark's 200 default wastes
-    scheduling overhead on local corpora; AQE coalesces further) —
-    results are partitioning-independent by the exactness rules, so
-    this only affects speed.
+    Shuffle width is `shuffle_width` — results are
+    partitioning-independent by the exactness rules, so it only
+    affects speed.
     """
     confs = dict(RUNTIME_CONFS)
-    confs["spark.sql.shuffle.partitions"] = str(max(os.cpu_count() or 4, 4))
+    confs["spark.sql.shuffle.partitions"] = str(shuffle_width(spark))
     for k, v in confs.items():
         try:
             spark.conf.set(k, v)

@@ -104,36 +104,6 @@ def test_jpeg_decode_survives_entropy_junk():
         assert out is None or out[2] == 1
 
 
-# ------------------------- python-worker recycling (bench aging)
-
-def test_recycle_python_workers_safe_between_jobs(spark):
-    """The aging mitigation's safety contract, proven live: after an
-    Arrow stage populates the reuse pool, killing the pooled workers
-    must (a) report kills, (b) leave the daemon able to serve the
-    next mapInPandas job (the 4.1 factory discards dead workers on
-    dequeue and forks fresh ones), and (c) produce identical results
-    before and after."""
-    from ethereum_export_pipeline_spark.session import (
-        recycle_python_workers)
-
-    def f(pdfs):
-        for pdf in pdfs:
-            yield pdf.assign(v=pdf["id"] * 3 % 7)
-
-    def run():
-        return (spark.range(0, 200_000, 1, 8)
-                     .mapInPandas(f, "id long, v long")
-                     .selectExpr("sum(v)").collect()[0][0])
-
-    before = run()
-    killed = recycle_python_workers(spark)
-    assert killed > 0, "expected pooled workers from the first run"
-    assert run() == before
-    # a second recycle-and-run cycle: the pool must have refilled
-    assert recycle_python_workers(spark) > 0
-    assert run() == before
-
-
 # ----------------------- crawl → train-manifest composed flagship
 
 def test_crawl_manifest_composition_invariants(spark):

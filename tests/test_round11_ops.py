@@ -2,10 +2,7 @@
 (a) same-application bucketed-table eviction parks the entry in the
 orphan registry instead of DROPping tables a still-live lazy frame
 scans, and orphans are reclaimed only once their owning application
-is dead; (b) `recycle_python_workers` refuses to kill workers while
-ANY session in the process has an active streaming query (streams run
-on isolated child sessions the caller's `spark.streams` cannot see);
-(c) the heavy-Arrow py-path step fix — the Int.MaxValue
+is dead; (b) the heavy-Arrow py-path step fix — the Int.MaxValue
 maxBytesPerBatch sentinel is applied everywhere, and a type-diverse
 Arrow batch no longer multiplies the JVM CPU of later mapInPandas
 stages (the round-10 open item, bisected and closed this round; see
@@ -63,43 +60,6 @@ def test_bucketed_same_app_eviction_parks_orphan(spark, tmp_path):
         eth._BUCKETED_TABLES.clear()
         eth._BUCKETED_TABLES.update(saved_memo)
         eth._SCRATCH_ORPHANS[:] = saved_orph
-
-
-# -------------- worker recycling refuses under active streaming
-
-def test_recycle_refuses_while_any_stream_active(spark):
-    """A pooled worker SIGKILLed mid-micro-batch fails the job
-    (local mode: spark.task.maxFailures=1), and streams run on child
-    sessions invisible to the caller's StreamingQueryManager — so the
-    guard must see a stream started via `isolated_session` and
-    refuse, then recycle normally once the stream stops."""
-    from ethereum_export_pipeline_spark.session import (
-        isolated_session, recycle_python_workers)
-
-    def run_arrow():
-        def f(pdfs):
-            for pdf in pdfs:
-                yield pdf.assign(v=pdf["id"] % 5)
-        return (spark.range(0, 100_000, 1, 4)
-                     .mapInPandas(f, "id long, v long")
-                     .selectExpr("sum(v)").collect()[0][0])
-
-    run_arrow()  # populate the reuse pool so a recycle WOULD kill
-    child = isolated_session(spark)
-    q = (child.readStream.format("rate")
-              .option("rowsPerSecond", 1).load()
-              .writeStream.format("noop").start())
-    try:
-        assert child.streams.active, "stream should be running"
-        assert recycle_python_workers(spark) == 0, \
-            "must refuse while a child session streams"
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    assert not child.streams.active
-    run_arrow()
-    assert recycle_python_workers(spark) > 0, \
-        "must recycle normally once streams are gone"
 
 
 # ---------------- the heavy-Arrow py-path step (r10 open item)

@@ -81,7 +81,8 @@ def measured():
         "tools"))
     import scale_smoke
 
-    from ethereum_export_pipeline_spark.session import RUNTIME_CONFS
+    from ethereum_export_pipeline_spark.session import (local_builder,
+                                                        shuffle_width)
 
     # getOrCreate silently REUSES any live session (its eventLog
     # configs then never apply: every envelope would read -1 bytes),
@@ -97,27 +98,16 @@ def measured():
             "runs. Run it alone (`pytest -m scale`), not in a mixed "
             "-m expression with fixture-backed tests.")
 
-    cpus = (int(os.environ.get("SPARK_GRAFT_CPUS", "0"))
-            or os.cpu_count() or 4)
     event_dir = tempfile.mkdtemp(prefix="spark_graft_envlog_")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale_envelopes")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", event_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.sql.warehouse.dir",
-                tempfile.mkdtemp(prefix="spark_graft_wh_")))
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = (local_builder("scale_envelopes")
+             .config("spark.eventLog.enabled", "true")
+             .config("spark.eventLog.dir", event_dir)
+             .config("spark.eventLog.compress", "false")
+             .getOrCreate())
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width(spark)))
     spark.sparkContext.setLogLevel("WARN")
     sc = spark.sparkContext
+    cpus = sc.defaultParallelism   # local[N]: the N local_builder set
 
     out = tempfile.mkdtemp(prefix="spark_graft_envdata_")
     copies = spark.range(AMPLIFY).select(F.col("id").alias("copy"))

@@ -84,36 +84,26 @@ def amplified_text_variants(amplify: int):
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     AMPLIFY = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
 
     sys.path.insert(0, ".")
     from ethereum_export_pipeline_spark.operators import dedup, text
-    from ethereum_export_pipeline_spark.session import RUNTIME_CONFS
+    from ethereum_export_pipeline_spark.session import (local_builder,
+                                                        shuffle_width)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     event_dir = tempfile.mkdtemp(prefix="spark_graft_evlog_")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale_smoke")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", event_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.sql.warehouse.dir",
-                tempfile.mkdtemp(prefix="spark_graft_wh_"))
-    )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = (local_builder("scale_smoke")
+             .config("spark.eventLog.enabled", "true")
+             .config("spark.eventLog.dir", event_dir)
+             .config("spark.eventLog.compress", "false")
+             .getOrCreate())
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width(spark)))
     spark.sparkContext.setLogLevel("WARN")
     sc = spark.sparkContext
+    cpus = sc.defaultParallelism   # local[N]: the N local_builder set
 
     # SMOKE_KEEP_DIR: reuse one amplified corpus across per-op runs
     # (a ×100 amplification costs minutes; per-op invocations then
